@@ -81,7 +81,13 @@ object Features {
     * deterministic total order, so callers pass unique tiebreak columns
     * (SURVEY §4.3-1). NaT rows sort last, like pandas na_position='last'.
     * coalesce(lag, 0) — NOT lag's default arg — because fillna(0) also
-    * fills lagged values that are themselves null. */
+    * fills lagged values that are themselves null.
+    *
+    * This is the only lag path: one hash shuffle on the jurisdiction and a
+    * window sort per key, so parallelism is bounded by the key count (~57
+    * NWSS jurisdictions). A skew-proof form needs exact, not sampled,
+    * partition boundaries (the `Metrics.refineCuts` pattern) and is not
+    * built until a workload shows a skewed key. */
   def lagFeatures(tiebreak: Seq[Column])(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("wwtp_jurisdiction"))
       .orderBy(col("sample_collect_date").asc_nulls_last +: tiebreak: _*)
@@ -94,30 +100,10 @@ object Features {
       .withColumn("log_conc_lag2", lagN(2))
   }
 
-  /** Skew-proof variant of stage 5 — identical results via
-    * ops.ScalableLag (range partition + boundary exchange), parallelism
-    * O(partitions) instead of O(#jurisdictions ≈ 57). This is the form the
-    * composed pipeline uses: at 100 TB a per-jurisdiction window serializes
-    * multi-TB partitions into single tasks (round-2 verdict, What's-wrong #1). */
-  def lagFeaturesScalable(tiebreak: Seq[Column],
-      numPartitions: Option[Int] = None)(df: DataFrame): DataFrame = {
-    import graft.ops.ScalableLag
-    val lagged = ScalableLag.withLags(
-      df,
-      partitionKeys = Seq("wwtp_jurisdiction"),
-      order = col("sample_collect_date").asc_nulls_last +: tiebreak,
-      src = col("log_pcr_target_conc"),
-      lags = Seq(
-        ScalableLag.LagCol("log_conc_lag1", 1, lit(0.0)),
-        ScalableLag.LagCol("log_conc_lag2", 2, lit(0.0))),
-      numPartitions = numPartitions)
-    // same pandas NaN-key masking as the plain-window form
-    lagged
-      .withColumn("log_conc_lag1",
-        when(col("wwtp_jurisdiction").isNull, lit(0.0)).otherwise(col("log_conc_lag1")))
-      .withColumn("log_conc_lag2",
-        when(col("wwtp_jurisdiction").isNull, lit(0.0)).otherwise(col("log_conc_lag2")))
-  }
+  /** Forwards to [[lagFeatures]]. Kept only because the benchmark harness
+    * (`perfbench/`) calls it by this name. */
+  def lagFeaturesScalable(tiebreak: Seq[Column])(df: DataFrame): DataFrame =
+    lagFeatures(tiebreak)(df)
 
   // --- stage 6 (codes.py:61-63): pd.cut population binning ------------------
   /** right=False ⇒ left-closed bins [0,20k) [20k,50k) [50k,200k) [200k,∞);
@@ -302,19 +288,16 @@ object Features {
     * CSV endpoints). `tiebreak` totalizes the lag window order; pass the
     * source's unique row key.
     *
-    * `cache=true` persists the input around the scalar prepass so the 4
-    * scalar jobs don't re-read the source (right call for CSV input, whose
-    * parse dominates). For columnar sources at very large scale prefer
-    * `cache=false`: each scalar job then prunes to its own 1-3 columns at
-    * the scan. Caller unpersists after the composed plan has executed. */
-  def pipeline(tiebreak: Seq[Column], cache: Boolean = true)(df: DataFrame): DataFrame = {
-    val base =
-      if (cache) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
+    * The input is persisted around the scalar prepass so its ≤4 scalar jobs
+    * and the composed plan don't each re-read the source (for CSV input the
+    * parse dominates). Caller unpersists after the composed plan has
+    * executed. */
+  def pipeline(tiebreak: Seq[Column])(df: DataFrame): DataFrame = {
+    val base = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val s = Ep1Scalars.compute(base)
     Seq[DataFrame => DataFrame](
       dateParts, imputeFlowWith(s.flowMedian), imputeFlowpopWith(s.flowpopMedian),
-      logsAndLabel, lagFeaturesScalable(tiebreak), binPopulation, targetEncode,
+      logsAndLabel, lagFeatures(tiebreak), binPopulation, targetEncode,
       dropCols, imputeModesWith(s), clipRecEff, dedup, encodeOrdinal, interactions
     ).foldLeft(base)((d, stage) => stage(d))
   }

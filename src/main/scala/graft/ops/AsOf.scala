@@ -22,10 +22,9 @@ import org.apache.spark.sql.functions._
   * keys on "is a right row", never on a picked value happening to be
   * null, and the whole match is one window expression.
   *
-  * Skewed keys: same story as ops/ScalableLag — the running window is a
-  * per-key linear pass, so a hot key serializes into one task; the
-  * range-split + per-split seed trick there applies verbatim if a key
-  * outgrows a task.
+  * Skewed keys: the running window is a per-key linear pass, so a hot key
+  * serializes into one task. Splitting a key needs exact (not sampled)
+  * split boundaries plus a per-split carried seed.
   *
   * Determinism: right rows sharing an exact (key, ts) are ordered
   * arbitrarily among themselves — pass a right frame distinct on

@@ -50,9 +50,8 @@ object ScaleGuardRule extends Rule[LogicalPlan] {
           throw new ScaleGuardViolation(
             "ScaleGuard: Window with no PARTITION BY moves every row to one " +
               "task. Partition the window, or use the engine's distributed " +
-              "forms (graft.ops.ScalableLag for global-order lags, " +
-              "graft.ml.Metrics.binaryStats' segment-offset pattern for " +
-              "global cumulative sums). If the input is provably bounded " +
+              "form (graft.ml.Metrics.binaryStats' segment-offset pattern " +
+              "for global cumulative sums). If the input is provably bounded " +
               "(e.g. a vocabulary), run this job class with " +
               s"$confKey=false and document the bound.")
         case j @ Join(_, _, Inner | Cross, None, _) if !broadcastHinted(j) =>

@@ -16,8 +16,8 @@ import graft.etl.Features
   * Numeric-parity choices: the two median-filled columns are INTEGER-valued
   * doubles (floor), so pandas-style interpolation `(a+b)/2` is bit-exact in
   * both engines regardless of interpolation formula; log/avg outputs are
-  * round(6)ed per the Q conventions. The lag runs on the skew-proof
-  * ScalableLag path, so CORRECTNESS/BENCH finally measure it.
+  * round(6)ed per the Q conventions. The lag is the same per-jurisdiction
+  * window (`Features.lagFeatures`) the composed pipeline runs.
   */
 object EtlQueries {
 
@@ -115,7 +115,7 @@ object EtlQueries {
       Features.dateParts,
       Features.imputeFlowWith(medians.get("flow_rate")),
       Features.imputeFlowpopWith(medians.get("pcr_target_flowpop_lin")),
-      Features.logsAndLabel, Features.lagFeaturesScalable(Seq(col("o_orderkey"))),
+      Features.logsAndLabel, Features.lagFeatures(Seq(col("o_orderkey"))),
       Features.binPopulation, Features.targetEncode
     ).foldLeft(src)((df, st) => st(df))
 

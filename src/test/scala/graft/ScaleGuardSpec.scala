@@ -68,7 +68,7 @@ class ScaleGuardSpec extends AnyFunSuite {
       try {
         val v = guardViolation(q())
         assert(v.getMessage.contains("PARTITION BY") &&
-          v.getMessage.contains("ScalableLag"),
+          v.getMessage.contains("binaryStats"),
           "the violation must name the fix, not just the crime")
       } finally s.conf.set("spark.graft.scaleguard", "false")
     }

@@ -31,8 +31,7 @@ class CodegenHardeningSpec extends AnyFunSuite {
     assertCompiles("synth scan") {
       raw.write.format("noop").mode("overwrite").save()
     }
-    val engineered = Features.pipeline(Seq(col("sample_id")),
-      cache = false)(raw)
+    val engineered = Features.pipeline(Seq(col("sample_id")))(raw)
     assertCompiles("EP1 feature pipeline") {
       engineered.write.format("noop").mode("overwrite").save()
     }
@@ -40,6 +39,7 @@ class CodegenHardeningSpec extends AnyFunSuite {
       graft.ml.Train.modelMatrix(engineered)
         .write.format("noop").mode("overwrite").save()
     }
+    raw.unpersist()
   }
 
   test("the declared g1 flagship plan executes fully compiled") {
