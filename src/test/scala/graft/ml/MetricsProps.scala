@@ -3,11 +3,12 @@ package graft.ml
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import graft.TestSpark
 
-/** The distributed threshold-sweep metrics must equal naive single-machine
+/** The threshold-sweep metrics must equal naive single-machine
   * implementations of the sklearn definitions (SURVEY §2.H8-H11):
   *  - ROC-AUC: average-rank Mann-Whitney (≡ trapezoid over all thresholds);
   *  - AP: step-wise Σ(Rₙ−Rₙ₋₁)Pₙ over distinct thresholds descending;
-  * exercised with heavy score ties, all-one-class edge cases aside. */
+  * exercised with heavy score ties and infinite scores, all-one-class edge
+  * cases aside, on both the driver sweep and the distributed sweep. */
 object MetricsProps extends Properties("Metrics") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -46,13 +47,22 @@ object MetricsProps extends Properties("Metrics") {
     n <- Gen.choose(2, 80)
     rows <- Gen.listOfN(n, for {
       y <- Gen.oneOf(0, 1)
-      s <- Gen.oneOf(Gen.choose(0, 8).map(_ / 8.0), Gen.chooseNum(0.0, 1.0)) // force ties
+      s <- Gen.frequency(
+        10 -> Gen.choose(0, 8).map(_ / 8.0), // force ties
+        10 -> Gen.chooseNum(0.0, 1.0),
+        1 -> Gen.oneOf(Double.PositiveInfinity, Double.NegativeInfinity))
     } yield (y, s))
   } yield rows
 
   private def scoredDf(rows: List[(Int, Double)]) =
     rows.map { case (y, s) => (y.toDouble, if (s > 0.5) 1.0 else 0.0, s) }
       .toDF("label", "prediction", "score")
+
+  /** (AUC, AP) from the driver sweep, then from the distributed sweep. */
+  private def bothPaths(rows: List[(Int, Double)]): Seq[(Double, Double)] = {
+    val df = scoredDf(rows)
+    Seq(Metrics.sweep(df), Metrics.sweep(df, driverMaxRows = 0L)).map(sw => (sw.auc, sw.ap))
+  }
 
   property("rocAuc == average-rank Mann-Whitney") = Prop.forAll(rowsGen) { rows =>
     val mixed = rows.map(_._1).distinct.size == 2
@@ -73,15 +83,35 @@ object MetricsProps extends Properties("Metrics") {
     }
   }
 
+  property("driver and distributed sweeps both equal the naive AUC and AP") =
+    Prop.forAll(rowsGen) { rows =>
+      val (wantAuc, wantAp) = (naiveAuc(rows), naiveAp(rows))
+      def close(got: Double, want: Double) =
+        (got.isNaN && want.isNaN) || math.abs(got - want) < 1e-9
+      val got = bothPaths(rows)
+      Prop(got.forall { case (auc, ap) => close(auc, wantAuc) && close(ap, wantAp) }) :|
+        s"driver, distributed $got want ($wantAuc, $wantAp)"
+    }
+
+  property("NaN and infinite scores sweep in the same order on both paths") = {
+    // Spark orders NaN above +∞; the driver sweep must order it the same way
+    val rows = List((1, Double.NaN), (0, Double.NaN), (0, Double.PositiveInfinity),
+      (1, 0.5), (0, 0.5), (1, 0.25), (0, Double.NegativeInfinity), (1, Double.NegativeInfinity))
+    val Seq(driver, dist) = bothPaths(rows)
+    Prop(math.abs(driver._1 - dist._1) < 1e-9 && math.abs(driver._2 - dist._2) < 1e-9) :|
+      s"driver $driver distributed $dist"
+  }
+
   property("adversarial score sliver: metrics exact, heavy bucket split") = {
     // 3000 distinct scores inside a ~3e-4-wide sliver of a 2e9-wide range:
     // the naive fixed-width bucketing puts 99.9% of them in ONE bucket;
-    // refineCuts must re-cut the sliver so no bucket exceeds maxBucket
+    // refineCuts must re-cut the sliver so no bucket exceeds maxBucket.
+    // 3002 scores fit the driver sweep, so the metrics are forced distributed.
     val rows = ((0 until 3000).map(i => (i % 2, 1e9 + i * 1e-4)) ++
       Seq((0, 0.0), (1, 2e9))).toList
     val df = scoredDf(rows)
-    val gotAuc = Metrics.rocAuc(df)
-    val gotAp = Metrics.averagePrecision(df)
+    val sw = Metrics.sweep(df, driverMaxRows = 0L)
+    val (gotAuc, gotAp) = (sw.auc, sw.ap)
     val aucOk = Prop(math.abs(gotAuc - naiveAuc(rows)) < 1e-9) :|
       s"auc $gotAuc want ${naiveAuc(rows)}"
     val apOk = Prop(math.abs(gotAp - naiveAp(rows)) < 1e-9) :|
@@ -90,13 +120,15 @@ object MetricsProps extends Properties("Metrics") {
     import org.apache.spark.sql.functions._
     val g = df.groupBy(col("score").cast(org.apache.spark.sql.types.DoubleType).as("s"))
       .agg(count(lit(1)).as("n"))
-    val p = 4
+    // p = 16 makes maxBucket = max(4·⌈3002/16⌉, 1024) = 1024 < 3002, so the
+    // 15 equal-width cuts must be refined
+    val p = 16
     val cuts = Metrics.refineCuts(g, p, 3002L, 0.0, 2e9)
     val maxBucket = math.max(4L * ((3002L + p - 1) / p), 1024L)
     val worst = g.groupBy(size(filter(lit(cuts.toArray), b => b > col("s"))).as("pid"))
       .agg(count(lit(1)).as("cnt")).agg(max("cnt")).head().getLong(0)
-    val splitOk = Prop(worst <= maxBucket) :|
-      s"heaviest bucket $worst > maxBucket $maxBucket (cuts=${cuts.size})"
+    val splitOk = Prop(maxBucket == 1024L && cuts.size > 15 && worst <= maxBucket) :|
+      s"heaviest bucket $worst, maxBucket $maxBucket, cuts=${cuts.size} (want > 15)"
     aucOk && apOk && splitOk
   }
 
