@@ -13,7 +13,7 @@ import graft.schema.Nwss
 /** EP3 — the reference's ML pipeline (codes.py:183-309) on Spark MLlib.
   *
   * H1  feature matrix + dropna          (codes.py:183-197)
-  * H2  stratified / deterministic split (codes.py:203-205)
+  * H2  deterministic hash split         (codes.py:203-205)
   * H3  StandardScaler fit on TRAIN only (codes.py:208-210)
   * H4  PCA at 95% variance — fit k=14 ONCE, slice columns (codes.py:214-216)
   * H5  GBT: n_estimators=100, lr=0.1, depth=3, logistic (codes.py:226)
@@ -43,7 +43,7 @@ object Train {
       .transform(clean)
   }
 
-  /** H2a: deterministic hash split — `pmod(xxhash64(key), nFolds)` picks the
+  /** H2: deterministic hash split — `pmod(xxhash64(key), nFolds)` picks the
     * test fold. Cross-run/cross-partitioning reproducible (what the golden
     * tests use), stratification holds in expectation since the hash is
     * independent of the label. */
@@ -51,19 +51,6 @@ object Train {
       seed: Long = 42L): (DataFrame, DataFrame) = {
     val fold = pmod(xxhash64(key, lit(seed)), lit(nFolds.toLong))
     (df.filter(fold =!= testFold), df.filter(fold === testFold))
-  }
-
-  /** H2b: sklearn-style stratified split — per-class randomSplit, unioned.
-    * Exact-fraction per class like `stratify=y` (statistical parity only;
-    * sklearn's exact row assignment is RNG-specific, SURVEY §7.5-3). */
-  def stratifiedSplit(df: DataFrame, labelCol: String = Nwss.label,
-      testFrac: Double = 0.2, seed: Long = 42L): (DataFrame, DataFrame) = {
-    val parts = df.select(labelCol).distinct().collect().map(_.get(0)).map { v =>
-      val Array(tr, te) = df.filter(col(labelCol) === v)
-        .randomSplit(Array(1.0 - testFrac, testFrac), seed)
-      (tr, te)
-    }
-    (parts.map(_._1).reduce(_ unionByName _), parts.map(_._2).reduce(_ unionByName _))
   }
 
   /** H3: standardization fit on train ONLY (codes.py:208-210). withMean

@@ -286,61 +286,25 @@ object LlmQueries {
       TextOps.shingleSet(TextOps.tokens(col("text")), ShingleN).as("ss"))
 
   /** The l4/l5 shared shingle frame — (doc_id, ss) — computed and
-    * `.cache()`d ONCE per (session, sfDir) and reused by every declared
-    * consumer (and any bench invocation). `.cache()` beat both lazy and
-    * eager `localCheckpoint` in situ (9.4 vs 10.2 vs 11.2 s for the
-    * cold dedup pipeline at sf0.1): the columnar build cost amortizes in
-    * a warm session, and the multi-scan consumers read the shared
-    * InMemoryRelation through the cache manager instead of racing to
-    * materialize a checkpoint RDD. Same trade for the pair and quality
-    * frames below.
-    *
-    * Race-safe (ADVICE r04): the thunk runs OUTSIDE the map update, the
-    * winner is installed with putIfAbsent, and a losing thread unpersists
-    * its orphaned frame. [[clearShingleCache]] is the eviction hook — call
-    * it between datasets in a long-lived session to release executor
-    * storage (each declared query re-derives lazily on next use). */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * `.cache()`d ONCE per (session, sfDir) through [[Shared.frame]] and
+    * reused by every declared consumer (and any bench invocation).
+    * `.cache()` beat both lazy and eager `localCheckpoint` in situ (9.4 vs
+    * 10.2 vs 11.2 s for the cold dedup pipeline at sf0.1): the columnar
+    * build cost amortizes in a warm session, and the multi-scan consumers
+    * read the shared InMemoryRelation through the cache manager instead of
+    * racing to materialize a checkpoint RDD. Same trade for the pair and
+    * quality frames below. [[clearShingleCache]] evicts. */
+  private def shingledCached(s: SparkSession, d: String): DataFrame =
+    Shared.frame(s, d, "shingles")(shingled(spread(documents(s, d))))
 
-  /** The verified exact near-dup PAIR frame — l4's output, l14's input —
-    * cached once per (session, sfDir) with the same discipline as
-    * [[shingleCache]]: a real dedup pipeline computes pair evidence once
-    * and both reports it (l4) and clusters it (l14); re-running the whole
-    * inverted-index + verify pipeline per consumer would be the bug.
-    * l5 deliberately does NOT share it: its LSH path must produce its own
-    * pairs for the same-oracle completeness check to mean anything. */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def exactPairsCached(s: SparkSession, d: String): DataFrame =
-    pairCache.get((s, d)) match {
-      case Some(p) => p
-      case None =>
-        val p = jaccardNearDupFrom(shingledCached(s, d)).cache()
-        pairCache.putIfAbsent((s, d), p) match {
-          case None => p
-          // the loser must NOT unpersist: CacheManager keys cached data by
-          // canonicalized plan, so loser and winner share ONE entry — the
-          // loser's cache() was a no-op on it and an unpersist would evict
-          // the winner's data (ADVICE r08). Same at every cache below.
-          case Some(winner) => winner
-        }
-    }
-
-  /** The per-doc quality/sampling frame — (doc_id, lang, metrics, keep,
-    * bucket) — cached once per (session, sfDir) and shared by l15
-    * (reports it) and l21 (filters it). Besides the compute-once
-    * rationale, the cache is a correctness-of-COST barrier: filtering
-    * directly on HOF-projected metric columns lets predicate pushdown
-    * substitute the full bigram-construction expression into the filter
-    * lambda (pushdown has no cheap-expression guard, unlike
-    * CollapseProject), where interpreted higher-order evaluation then
-    * re-derives split(lower(text)) PER LAMBDA ELEMENT — measured 77 s for
-    * 5 000 docs at sf0.1 vs ~1 s for the same predicate against the
-    * materialized columns. */
-  private val qualityCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  /** The verified exact near-dup PAIR frame — l4's output, l14's input:
+    * a real dedup pipeline computes pair evidence once and both reports it
+    * (l4) and clusters it (l14); re-running the whole inverted-index +
+    * verify pipeline per consumer would be the bug. l5 deliberately does
+    * NOT share it: its LSH path must produce its own pairs for the
+    * same-oracle completeness check to mean anything. */
+  private[queries] def exactPairsCached(s: SparkSession, d: String): DataFrame =
+    Shared.frame(s, d, "pairs")(jaccardNearDupFrom(shingledCached(s, d)))
 
   /** Public handle to the shared l15 quality frame — the H↔L bridge: l80's
     * trainer (ml/PinnedQualityLr) fits on exactly the metric frame the
@@ -349,71 +313,38 @@ object LlmQueries {
   def qualityMetricsFrameFor(s: SparkSession, d: String): DataFrame =
     qualityCached(s, d)
 
+  /** The per-doc quality/sampling frame — (doc_id, lang, metrics, keep,
+    * bucket) — shared by l15 (reports it) and l21 (filters it). Besides the
+    * compute-once rationale, the cache is a correctness-of-COST barrier:
+    * filtering directly on HOF-projected metric columns lets predicate
+    * pushdown substitute the full bigram-construction expression into the
+    * filter lambda (pushdown has no cheap-expression guard, unlike
+    * CollapseProject), where interpreted higher-order evaluation then
+    * re-derives split(lower(text)) PER LAMBDA ELEMENT — measured 77 s for
+    * 5 000 docs at sf0.1 vs ~1 s for the same predicate against the
+    * materialized columns. */
   private def qualityCached(s: SparkSession, d: String): DataFrame =
-    qualityCache.get((s, d)) match {
-      case Some(q) => q
-      case None =>
-        val h = md5(col("doc_id").cast("string").cast("binary"))
-        val bucket = conv(substring(h, 1, 8), 16, 10).cast("long") % 100
-        val q = qualityMetricsFrame(
-          spread(documents(s, d)).select(col("doc_id"), col("text"),
-            col("lang"), bucket.as("bucket")),
-          extra = Seq("lang", "bucket")).cache()
-        qualityCache.putIfAbsent((s, d), q) match {
-          case None => q
-          case Some(winner) => winner // shares the plan-keyed entry (see pairCache)
-        }
+    Shared.frame(s, d, "quality") {
+      val h = md5(col("doc_id").cast("string").cast("binary"))
+      val bucket = conv(substring(h, 1, 8), 16, 10).cast("long") % 100
+      qualityMetricsFrame(
+        spread(documents(s, d)).select(col("doc_id"), col("text"),
+          col("lang"), bucket.as("bucket")),
+        extra = Seq("lang", "bucket"))
     }
 
-  /** Cluster labels over the cached pair frame — the connectedComponents
+  /** Cluster labels over the shared pair frame — the connectedComponents
     * run is iterative (one job per round), so l14 and l21 sharing one
-    * fixpoint instead of running two is a real saving; the result frame
-    * is already materialized by the final round's localCheckpoint, so no
-    * extra persist is needed (nothing to unpersist on eviction — the
-    * checkpoint RDDs die with the frame references). */
-  private val labelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+    * fixpoint instead of running two is a real saving. */
   private def clusterLabelsCached(s: SparkSession, d: String): DataFrame =
-    labelCache.getOrElseUpdate((s, d),
-      graft.ops.Graph.connectedComponents(
-        exactPairsCached(s, d).select(col("i"), col("j"))))
+    Shared.frame(s, d, "cc_labels")(graft.ops.Graph.connectedComponents(
+      exactPairsCached(s, d).select(col("i"), col("j"))))
 
-  /** Shared frames of the composed pipeline stages (decontamination flags,
-    * mix survivors) — cached per (session, sfDir, tag) with the same
-    * race-safe discipline as [[shingleCache]], so the declared stage query
-    * and the l34 capstone read one materialization. */
-  private val composedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  private def cachedFrame(s: SparkSession, d: String, tag: String)(
-      mk: => DataFrame): DataFrame =
-    composedCache.get((s, d, tag)) match {
-      case Some(f) => f
-      case None =>
-        val f = mk.cache()
-        composedCache.putIfAbsent((s, d, tag), f) match {
-          case None => f
-          case Some(winner) => winner // shares the plan-keyed entry (see pairCache)
-        }
-    }
-
-  /** Unpersist and forget every cached shingle and pair frame. */
-  def clearShingleCache(): Unit = {
-    shingleCache.keys.foreach { k =>
-      shingleCache.remove(k).foreach { cached => cached.unpersist(); () }
-    }
-    pairCache.keys.foreach { k =>
-      pairCache.remove(k).foreach { cached => cached.unpersist(); () }
-    }
-    qualityCache.keys.foreach { k =>
-      qualityCache.remove(k).foreach { cached => cached.unpersist(); () }
-    }
-    composedCache.keys.foreach { k =>
-      composedCache.remove(k).foreach { cached => cached.unpersist(); () }
-    }
-    labelCache.clear()
-  }
+  /** Unpersist and forget every shared query frame: both hooks (and
+    * `MlQueries.clearStatsCache`) forward to the one eviction routine,
+    * [[Shared.clear]]. */
+  def clearShingleCache(): Unit = Shared.clear()
+  def clearQuantizerCache(): Unit = Shared.clear()
 
   /** Value of the first 8 hex chars of md5 column `h`, decoded digit by
     * digit: Σ dᵢ·16^(8−i) — the cross-engine uniform key (DuckDB cannot
@@ -422,17 +353,6 @@ object LlmQueries {
   private def hexValOf(h: String): String = (1 to 8).map(i =>
     s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}")
     .mkString(" + ")
-
-  private def shingledCached(s: SparkSession, d: String): DataFrame =
-    shingleCache.get((s, d)) match {
-      case Some(sh) => sh
-      case None =>
-        val sh = shingled(spread(documents(s, d))).cache()
-        shingleCache.putIfAbsent((s, d), sh) match {
-          case None => sh
-          case Some(winner) => winner // shares the plan-keyed entry (see pairCache)
-        }
-    }
 
   /** Candidate verification shared by l4/l5: join candidate (i, j) pairs
     * back to the FULL shingle sets and keep exact Jaccard ≥ tau —
@@ -847,38 +767,10 @@ object LlmQueries {
     * many. l7 and l11 share one corpus and one default k, so the second
     * query's fit (count job + seed TopK + refine aggregate) is a cache
     * read; in a long-lived session this is the IVF deployment shape: the
-    * index is built once and served to every probe query. Keyed by the
-    * CANONICALIZED analyzed plan string (alias/exprId-insensitive, exact —
-    * no hash-collision aliasing), race-safe like [[shingleCache]]: thunk
-    * outside the map update, putIfAbsent installs the winner, the loser
-    * keeps its hands off the shared plan-keyed cache entry.
-    * [[clearQuantizerCache]] evicts. */
-  private val quantizerCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Option[Int]), DataFrame]
-
-  /** Unpersist and forget every cached quantizer fit and ranked
-    * assignment. */
-  def clearQuantizerCache(): Unit = {
-    quantizerCache.keys.foreach { k =>
-      quantizerCache.remove(k).foreach { cached => cached.unpersist(); () }
-    }
-    assignCache.keys.foreach { k =>
-      assignCache.remove(k).foreach { cached => cached.unpersist(); () }
-    }
-  }
-
-  private def fitQuantizerCached(df: DataFrame, kOpt: Option[Int]): DataFrame = {
-    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized.toString, kOpt)
-    quantizerCache.get(key) match {
-      case Some(fit) => fit
-      case None =>
-        val fit = fitQuantizer(df, kOpt).cache()
-        quantizerCache.putIfAbsent(key, fit) match {
-          case None => fit
-          case Some(winner) => winner // shares the plan-keyed entry (see pairCache)
-        }
-    }
-  }
+    * index is built once and served to every probe query. Keyed by
+    * [[Shared.planKey]]. */
+  private def fitQuantizerCached(df: DataFrame, kOpt: Option[Int]): DataFrame =
+    Shared.frame(df.sparkSession, Shared.planKey(df), s"ivf_fit:$kOpt")(fitQuantizer(df, kOpt))
 
   /** The shared FULL-RANKING assignment frame — (vec_id, v, nrm, ranked)
     * where `ranked(0)` is the row's argmax bucket and `slice(ranked, 1,
@@ -894,24 +786,12 @@ object LlmQueries {
     * at 100 TB you'd persist only the top-P probe ids (P = the largest
     * nprobe served) and re-rank the tail on demand, since k = ⌊√N⌋ ids
     * per row is O(N^1.5) storage kept only for probe-flexibility. */
-  private val assignCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Option[Int]), DataFrame]
-
-  private def rankedAssignedCached(df: DataFrame, kOpt: Option[Int]): DataFrame = {
-    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized.toString, kOpt)
-    assignCache.get(key) match {
-      case Some(a) => a
-      case None =>
-        val a = withNorm(df).crossJoin(broadcast(fitQuantizerCached(df, kOpt)))
-          .withColumn("ranked", transform(rankedCents(col("cents")), p => p.getField("cl")))
-          .select(col("vec_id"), col("v"), col("nrm"), col("ranked"))
-          .cache()
-        assignCache.putIfAbsent(key, a) match {
-          case None => a
-          case Some(winner) => winner // shares the plan-keyed entry (see pairCache)
-        }
+  private def rankedAssignedCached(df: DataFrame, kOpt: Option[Int]): DataFrame =
+    Shared.frame(df.sparkSession, Shared.planKey(df), s"ivf_assign:$kOpt") {
+      withNorm(df).crossJoin(broadcast(fitQuantizerCached(df, kOpt)))
+        .withColumn("ranked", transform(rankedCents(col("cents")), p => p.getField("cl")))
+        .select(col("vec_id"), col("v"), col("nrm"), col("ranked"))
     }
-  }
 
   /** L7: IVF-pruned ANN — the scale path for l6. Each query probes its
     * `nprobe` nearest centroids and scores ONLY vectors assigned to those
@@ -1205,14 +1085,14 @@ object LlmQueries {
     * and the general LM (fit on everything — no OOV possible by
     * construction). Public so the spec can replay it. */
   private[queries] def mooreLewisScores(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "ml90")(mooreLewisScoresUncached(s, d))
+    Shared.frame(s, d, "ml90")(mooreLewisScoresUncached(s, d))
 
   /** The uncached construction behind [[mooreLewisScores]]. The declared
     * l90 row reads the score frame FOUR times (the quantile fit's stats +
     * histogram + pick jobs, then the output), and the frame is a
     * two-aggregation + broadcast-probe pipeline — uncached, that is three
     * wasted corpus passes (VERDICT r13 finding 2; measured 5.7 s → the
-    * cachebuild:ml90 line + sub-second consumers). Same `cachedFrame`
+    * cachebuild:ml90 line + sub-second consumers). Same `Shared.frame`
     * discipline as l38's dsirscore. */
   private def mooreLewisScoresUncached(s: SparkSession, d: String): DataFrame = {
     val toks = spread(documents(s, d))
@@ -3384,9 +3264,9 @@ object LlmQueries {
        |          WHERE mkk.bu * mb.wb * mg.n < mg.wt * mb.nb * 4294967296)""".stripMargin
 
   /** l31's surviving (doc_id, lang) set, unordered — shared by the
-    * declared row and the l34 capstone via [[cachedFrame]]. */
+    * declared row and the l34 capstone via [[Shared.frame]]. */
   private def mixKeptDocs(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "mixkept") {
+    Shared.frame(s, d, "mixkept") {
       val session = s
       import session.implicits._
       val wdf = Seq(("en", 400L), ("es", 150L), ("fr", 150L), ("de", 150L),
@@ -3630,10 +3510,10 @@ object LlmQueries {
       |       FROM t JOIN p USING (tok) GROUP BY t.doc_id)""".stripMargin
 
   /** l32's result frame — (doc_id, n_tokens, avg_nll), unordered — shared
-    * by the declared row and l39's CCNet bucketing via [[cachedFrame]] so
+    * by the declared row and l39's CCNet bucketing via [[Shared.frame]] so
     * the vocab fit + broadcast probe run once per (session, sfDir). */
   private def nllFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "nll") {
+    Shared.frame(s, d, "nll") {
       val toks = spread(documents(s, d))
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
       val vocab = toks.groupBy("tok").agg(count(lit(1)).as("c"))
@@ -3838,7 +3718,7 @@ object LlmQueries {
     * cached once per (session, sfDir) so l27 (exact overlap) and l37 (max
     * containment) share one gram construction. */
   private def deconGrams(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "dgrams") {
+    Shared.frame(s, d, "dgrams") {
       val h = md5(col("doc_id").cast("string").cast("binary"))
       val bucket = conv(substring(h, 1, 8), 16, 10).cast("long") % 100
       spread(documents(s, d)).select(
@@ -3849,9 +3729,9 @@ object LlmQueries {
 
   /** l27's result frame — (doc_id, n_hits, keep) over the training split,
     * unordered — shared by the declared row and the l34 capstone via
-    * [[cachedFrame]]. */
+    * [[Shared.frame]]. */
   private def deconFrame(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "decon") {
+    Shared.frame(s, d, "decon") {
       val base = deconGrams(s, d)
       val evalGrams = base.filter(col("bucket") < 15)
         .select(explode(col("grams")).as("gram")).distinct()
@@ -3986,7 +3866,7 @@ object LlmQueries {
     * bucket array. md5-keyed for the oracle — see [[dsirScoreFrame]] for
     * the production xxhash64 binding. */
   private def dsirScores(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "dsirscore") {
+    Shared.frame(s, d, "dsirscore") {
       dsirScoreFrame(spread(documents(s, d)),
         bucketOf = g => conv(substring(md5(g.cast("binary")), 1, 8), 16, 10)
           .cast("long") % DsirB,
@@ -7733,7 +7613,7 @@ object LlmQueries {
     * ([[pqAdcSearch]]/[[pqAdcSearchIvf]] stay uncached) so
     * determinism/recall checks rebuild from scratch. */
   private def pqSearchCached(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "pq_rank")(pqAdcSearchIvf(nprobe = 3)(embeddings(s, d)))
+    Shared.frame(s, d, "pq_rank")(pqAdcSearchIvf(nprobe = 3)(embeddings(s, d)))
 
   /** The declared l107 engine: [[pqAdcSearch]]'s ADC scoring with l7's
     * coarse route composed in front (IVF-PQ). Codes, buckets and query
@@ -7745,8 +7625,7 @@ object LlmQueries {
     * probes every bucket and reproduces the flat scan exactly
     * (LlmOpsSpec pins it). */
   def pqAdcSearchIvf(nprobe: Int, kOpt: Option[Int] = None)(df: DataFrame): DataFrame = {
-    val cbF = cachedFrame(df.sparkSession,
-      df.queryExecution.analyzed.canonicalized.toString, "pq_cb")(pqFit(df))
+    val cbF = Shared.frame(df.sparkSession, Shared.planKey(df), "pq_cb")(pqFit(df))
     val asg = rankedAssignedCached(df, kOpt)
     val enc = asg.crossJoin(broadcast(cbF))
       .select(col("vec_id"), col("cb"),
@@ -7784,8 +7663,7 @@ object LlmQueries {
     * (qid, rank, vec_id, adc). Work is |queries|·N — deliberately NOT the
     * declared shape (VERDICT r14 #1). */
   def pqAdcSearch(df: DataFrame): DataFrame = {
-    val cbF = cachedFrame(df.sparkSession,
-      df.queryExecution.analyzed.canonicalized.toString, "pq_cb")(pqFit(df))
+    val cbF = Shared.frame(df.sparkSession, Shared.planKey(df), "pq_cb")(pqFit(df))
     val e = withNorm(df)
     val enc = e.crossJoin(broadcast(cbF))
       .select(col("vec_id"), col("cb"),
@@ -8383,7 +8261,7 @@ object LlmQueries {
     * against — session-cached (pair-evidence-sized: hundreds of rows at
     * test SF) so the audit does not re-run the lossless engine. */
   private def containExactCached(s: SparkSession, d: String): DataFrame =
-    cachedFrame(s, d, "contain")(
+    Shared.frame(s, d, "contain")(
       containmentPairs(containmentFixture(s, d), tau = 0.8))
 
   /** The l114/l134 shared fixture: the corpus augmented with engineered
@@ -9576,16 +9454,16 @@ object LlmQueries {
       .orderBy(col("pmi").desc, col("bigram")).limit(20)
   }
 
-  /** Named builders for every shared session cache in this file, in
-    * dependency order (pairs reads shingles, cc_labels reads pairs, decon
-    * reads dgrams, ivf_assign reads the quantizer fit). Bench runs these
-    * BEFORE its timed query loop and reports each as its own
-    * `cachebuild:<tag>` line, so the alphabetically-first consumer of a
-    * shared cache measures ITS OWN work instead of absorbing the build —
+  /** Named builders for every frame this file shares through
+    * [[Shared.frame]], in dependency order (pairs reads shingles, cc_labels
+    * reads pairs, decon reads dgrams, ivf_assign reads the quantizer fit).
+    * Bench runs these BEFORE its timed query loop and reports each as its
+    * own `cachebuild:<tag>` line, so the alphabetically-first consumer of a
+    * shared frame measures ITS OWN work instead of absorbing the build —
     * the l14/l15 attribution noise that cost a review cycle in rounds
-    * 8-10 (VERDICT r10 #3). Each thunk forces the cached frame with a
+    * 8-10 (VERDICT r10 #3). Each thunk forces the shared frame with a
     * count (trivial when already built); correctness paths are untouched —
-    * outside Bench the caches still build lazily at first use. */
+    * outside Bench the frames still build lazily at first use. */
   def cacheBuilders: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     ("shingles", (s, d) => { shingledCached(s, d).count(); () }),
     ("pairs", (s, d) => { exactPairsCached(s, d).count(); () }),
@@ -9597,8 +9475,7 @@ object LlmQueries {
     // measures its own work, not the shared fit/search
     ("pq_cb", (s, d) => {
       val df = embeddings(s, d)
-      cachedFrame(s, df.queryExecution.analyzed.canonicalized.toString,
-        "pq_cb")(pqFit(df)).count(); ()
+      Shared.frame(s, Shared.planKey(df), "pq_cb")(pqFit(df)).count(); ()
     }),
     ("pq_rank", (s, d) => { pqSearchCached(s, d).count(); () }),
     ("nll", (s, d) => { nllFrame(s, d).count(); () }),

@@ -57,38 +57,16 @@ object MlQueries {
   /** The threshold-sweep stats frame (Metrics.binaryStats over the shared
     * scored frame) — h9 and h10 both read it, and its construction is
     * EAGER (min/max probe + cut refinement + totals collect), so each
-    * consumer re-running it doubles those jobs. Cached once per (session,
-    * sfDir) with the LlmQueries shared-frame discipline: thunk outside
-    * the map update, putIfAbsent, loser leaves the shared entry alone. */
-  private val statsCache =
-    scala.collection.concurrent.TrieMap.empty[
-      (org.apache.spark.sql.SparkSession, String), DataFrame]
-
-  /** Unpersist and forget every cached threshold-sweep frame — the
-    * eviction hook for long-lived sessions iterating many data dirs
-    * (ADVICE r07: winners were never unpersisted), mirroring
-    * LlmQueries.clearShingleCache. */
-  def clearStatsCache(): Unit =
-    statsCache.keys.foreach { k =>
-      statsCache.remove(k).foreach { cached => cached.unpersist(); () }
-    }
-
+    * consumer re-running it doubles those jobs. Shared once per (session,
+    * sfDir) through [[Shared.frame]]. */
   private def binaryStatsCached(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    statsCache.get((s, d)) match {
-      case Some(st) => st
-      case None =>
-        val st = Metrics.binaryStats(
-          scored(s, d).select(col("label"), col("x").as("score"))).cache()
-        statsCache.putIfAbsent((s, d), st) match {
-          case None => st
-          // no unpersist on the losing branch: CacheManager keys cached
-          // data by canonicalized plan, so loser and winner share ONE
-          // entry and an unpersist here would evict the winner's data
-          // (ADVICE r08 — same discipline as LlmQueries.pairCache)
-          case Some(winner) => winner
-        }
-    }
+    Shared.frame(s, d, "ml_stats")(Metrics.binaryStats(
+      scored(s, d).select(col("label"), col("x").as("score"))))
+
+  /** Unpersist and forget every shared query frame — a forwarder to the
+    * one eviction routine, [[Shared.clear]]. */
+  def clearStatsCache(): Unit = Shared.clear()
 
   /** H6+H7 (codes.py:227,258-261): OLS-as-scorer — single-feature least
     * squares fit as a closed-form aggregate (slope = cov/var), scored with

@@ -18,22 +18,20 @@ object ScaleQueries {
   private def scratchDir(s: org.apache.spark.sql.SparkSession, d: String,
       prefix: String): String = graft.Tables.scratchDir(s, d, prefix)
 
-  /** The conf-scoped child session a12 plans its bloom-pruned join in —
-    * memoized per parent session (ADVICE r08: a fresh `newSession()` per
-    * invocation churned a SessionState + catalog + native-function
-    * registry on every bench/correctness run). Shared context and cache;
-    * only the private conf differs from the parent. */
-  private val bloomSessionCache =
-    scala.collection.concurrent.TrieMap
-      .empty[org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]
+  /** The conf-scoped child session a query plans in (a12's bloom join,
+    * f8's skew join) — memoized per (parent session, tag) (ADVICE r08: a
+    * fresh `newSession()` per invocation churned a SessionState + catalog
+    * + native-function registry on every bench/correctness run). Shared
+    * context and cache; only the private conf differs from the parent,
+    * whose conf is never touched. */
+  private val confSessions = scala.collection.concurrent.TrieMap.empty[
+    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.SparkSession]
 
-  private def bloomSession(
-      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
-    bloomSessionCache.getOrElseUpdate(s, {
+  private def confSession(s: org.apache.spark.sql.SparkSession, tag: String,
+      confs: (String, String)*): org.apache.spark.sql.SparkSession =
+    confSessions.getOrElseUpdate((s, tag), {
       val s2 = graft.Tables.prep(s.newSession())
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      confs.foreach { case (k, v) => s2.conf.set(k, v) }
       s2
     })
 
@@ -144,33 +142,6 @@ object ScaleQueries {
       .orderBy("l_linestatus")
   }
 
-  /** The conf-scoped child session f8 plans its skew-split join in (the
-    * a12 idiom): AQE's `OptimizeSkewedJoin` is what a real cluster reaches
-    * for FIRST when a shuffle key is hot — its thresholds are sized for
-    * cluster partitions (256 MB skew threshold), so the child session
-    * lowers them to test-SF sizes, forces the split even when it costs an
-    * extra exchange, and disables auto-broadcast (a broadcastable dim
-    * would dodge the shuffle the demo is about — when the dim CAN
-    * broadcast, broadcasting is the right fix; skew-join handles the dims
-    * too big for that). The shared session's conf is never touched. */
-  private val skewSessionCache =
-    scala.collection.concurrent.TrieMap
-      .empty[org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]
-
-  private def skewSession(
-      s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
-    skewSessionCache.getOrElseUpdate(s, {
-      val s2 = graft.Tables.prep(s.newSession())
-      s2.conf.set("spark.sql.adaptive.enabled", "true")
-      s2.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      s2.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      s2.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16k")
-      s2.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8k")
-      s2.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s2
-    })
-
   private val SaltBuckets = 16
 
   /** F4: salted skew join — 90% of fact rows share ONE foreign key, the
@@ -229,7 +200,20 @@ object ScaleQueries {
       |FROM fact f JOIN nation n ON f.nk = n.n_nationkey
       |ORDER BY f.l_orderkey, f.l_linenumber""".stripMargin
   ) { (s, d) =>
-    val s2 = skewSession(s)
+    // AQE's `OptimizeSkewedJoin` thresholds are sized for cluster
+    // partitions (256 MB skew threshold): lower them to test-SF sizes,
+    // force the split even when it costs an extra exchange, and disable
+    // auto-broadcast (a broadcastable dim would dodge the shuffle the demo
+    // is about — when the dim CAN broadcast, broadcasting is the right fix;
+    // skew-join handles the dims too big for that)
+    val s2 = confSession(s, "skew",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8k",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val fact = lineitem(s2, d).select(
       col("l_orderkey"), col("l_linenumber"),
       when(col("l_orderkey") % 10 =!= 0, 0L).otherwise(col("l_orderkey") % 25).as("nk"))
@@ -618,7 +602,10 @@ object ScaleQueries {
       |WHERE o_orderpriority = '1-URGENT'
       |GROUP BY 1 ORDER BY 1""".stripMargin
   ) { (s, d) =>
-    val s2 = bloomSession(s)
+    val s2 = confSession(s, "bloom",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val ord = orders(s2, d).filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey")
     lineitem(s2, d).select("l_orderkey", "l_returnflag", "l_extendedprice")

@@ -38,19 +38,6 @@ class TrainSpec extends AnyFunSuite {
     assert(frac > 0.15 && frac < 0.25, s"test fraction $frac")
   }
 
-  test("H2 stratifiedSplit: per-class fractions near 20%") {
-    val df = mk(3000)
-    val (_, te) = Train.stratifiedSplit(df)
-    val byClass = te.groupBy("influenza_a_detected").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val totals = df.groupBy("influenza_a_detected").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    Seq(0, 1).foreach { c =>
-      val f = byClass(c).toDouble / totals(c)
-      assert(f > 0.14 && f < 0.26, s"class $c test fraction $f")
-    }
-  }
-
   test("H3 scaler: train-fit transform has ~zero mean and ~unit variance on train") {
     val m = Train.modelMatrix(mk(1000), feats)
     val scaled = Train.fitScaler(m).transform(m)
