@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Loaders for the driver testdata tables (TESTDATA.md): TPC-H-ish star
   * schema + `events` stream table + `documents`/`embeddings` for the
@@ -87,8 +89,25 @@ object Tables {
     *    (`pd.to_datetime(errors='coerce')`, codes.py:28; `NaN > 0 == False`,
     *    codes.py:50) and the DuckDB oracle SQL uses TRY_CAST to match.
     *  - UTC: keeps date-part extraction stable vs the oracle.
+    *  - Room for [[CodegenCacheEntries]] generated classes. Spark keeps
+    *    Janino-compiled classes in one JVM-wide LRU cache, keyed by (source,
+    *    compiling thread's class loader): a stage compiled on the driver and
+    *    again in a task takes two entries. The cache is sized once, from the
+    *    static conf `spark.sql.codegen.cache.maxEntries` (default 100) of the
+    *    session active at the JVM's first codegen, so it must be set before
+    *    then; it goes through `sessionState` because `spark.conf.set` rejects
+    *    static confs. One `curation` pass (shingles builder + 13 consumers)
+    *    needs about 300 entries: three rounds in one JVM on the sf0.01
+    *    corpus compiled 325 / 317 / 316 classes at the default, and
+    *    300 / 8 / 10 with room. A larger value the caller already set is
+    *    kept. If the JVM compiled before the first `prep`, the size may no
+    *    longer apply, and one WARN says so.
     */
   def prep(spark: SparkSession): SparkSession = {
+    warnIfCompiledBeforePrep
+    val conf = spark.sessionState.conf
+    if (conf.getConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES) < CodegenCacheEntries)
+      conf.setConfString(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toString)
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // Testdata timestamp-type drift guard (SURVEY §4.3): naive parquet
@@ -106,6 +125,20 @@ object Tables {
     graft.functions.TextExprs.register(spark)
     spark
   }
+
+  /** About three `curation` passes, with headroom for `Bench`/`Verify`,
+    * which run hundreds of queries in one JVM. */
+  private[graft] val CodegenCacheEntries = 1000
+
+  /** Checked once, at the JVM's first `prep`: a compile before it means the
+    * generated-class cache was probably sized already, by whichever session
+    * compiled first. */
+  private lazy val warnIfCompiledBeforePrep: Unit =
+    if (CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        "graft.Tables.prep ran after this JVM's first codegen compile: " +
+          s"${StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key}=$CodegenCacheEntries may not " +
+          "apply, and the generated-class cache keeps the size it was built with")
 
   /** Spread a tiny-input, compute-heavy frame across the session's cores.
     * Compressed text EXPANDS: the corpus at test SF is a sub-MB parquet

@@ -39,7 +39,9 @@ class ScaleGuardSpec extends AnyFunSuite {
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
-      f(s)
+      // before the first query: if this suite starts the test JVM, its
+      // session is the one that sizes the generated-class cache
+      f(graft.Tables.prep(s))
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
