@@ -199,8 +199,7 @@ object Bench {
     }
     val cacheSizes = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val cacheLines =
-      (graft.queries.LlmQueries.cacheBuilders ++
-        graft.queries.MlQueries.cacheBuilders)
+      graft.queries.LlmQueries.cacheBuilders
         .map { case (tag, build) => (s"cachebuild:$tag", build) }
         .filter { case (n, _) => only.forall(_.exists(n.contains)) }
         .map { case (name, build) =>

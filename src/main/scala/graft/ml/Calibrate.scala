@@ -53,6 +53,7 @@ object Calibrate {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.Tables.prep(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()

@@ -5,19 +5,21 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
-/** H8-H11 — evaluation metrics as DataFrame aggregates over a scored frame
-  * with columns `label` (0/1), `prediction` (0/1), `score` (higher ⇒ more
-  * positive). All exact.
+/** H8-H11 — evaluation metrics over a scored frame with columns `label`
+  * (0/1), `prediction` (0/1), `score` (higher ⇒ more positive). All exact.
+  * The one implementation of each: EP3 (`Train`) and the oracle-checked
+  * `h8`–`h11`/`h18` queries (`graft.queries.MlQueries`) both call it.
   *
-  * The threshold sweep (AUC, AP) starts from ONE cached distinct-score
-  * frame g = (s, np, nn) and one probe aggregate over it (row count, finite
-  * score range, totals). Up to `DriverSweepMaxRows` distinct scores are
-  * collected and swept on the driver in Spark's descending score order.
-  * More — and always for `binaryStats` — are swept scale-safely: bucket by
-  * score DESCENDING, per-bucket running sums via a window keyed by bucket
-  * id, plus driver-computed bucket offsets (one tiny collect of ≤#buckets
-  * rows) — never a single-task global sort, so a billion-row scored set
-  * sweeps fine (SURVEY §2.H9-H10).
+  * Accuracy and the per-class report are functions of the confusion
+  * counts (one grouped collect). The threshold sweep (AUC, AP) starts from
+  * ONE cached distinct-score frame g = (s, np, nn) and one probe aggregate
+  * over it (row count, finite score range, totals). Up to
+  * `DriverSweepMaxRows` distinct scores are collected and swept on the
+  * driver in Spark's descending score order. More are swept scale-safely:
+  * bucket by score DESCENDING, per-bucket running sums via a window keyed by
+  * bucket id, plus driver-computed bucket offsets (one tiny collect of
+  * ≤#buckets rows) — never a single-task global sort, so a billion-row
+  * scored set sweeps fine (SURVEY §2.H9-H10).
   *
   * sklearn parity notes: ROC-AUC via trapezoid over all distinct thresholds
   * equals the tie-corrected Mann-Whitney statistic — the formula used here.
@@ -26,10 +28,13 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
   */
 object Metrics {
 
-  /** H8: accuracy = mean(label == prediction). */
-  def accuracy(scored: DataFrame): Double =
-    scored.agg(avg((col("label") === col("prediction")).cast(DoubleType)))
-      .head().getDouble(0)
+  /** H8: accuracy = mean(label == prediction), from the confusion counts:
+    * one grouped collect. */
+  def accuracy(scored: DataFrame): Double = accuracy(confusion(scored))
+
+  /** H8 over confusion counts: (TN + TP) / n; NaN when n = 0. */
+  def accuracy(cm: Array[Array[Long]]): Double =
+    (cm(0)(0) + cm(1)(1)).toDouble / cm.map(_.sum).sum
 
   /** pid = #cuts above s (cuts kept DESCENDING), so bucket 0 holds the
     * HIGHEST scores and pid order is score order — what the prefix offsets
@@ -131,23 +136,10 @@ object Metrics {
         (col("cnn") + col("onn")).as("fp"))
   }
 
-  /** Per-distinct-score cumulative confusion counts, score DESCENDING:
-    * (s, np, nn, tp, fp) — np/nn = positives/negatives AT s, tp/fp =
-    * positives/negatives with score ≥ s. Always the distributed sweep. */
-  def binaryStats(scored: DataFrame): DataFrame = {
-    // the eager phase — the probe, up to 6 refineCuts levels, AND the
-    // totals collect — scans g several times: cache it through all of
-    // them and release before returning (ADVICE r05: unpersisting after
-    // refineCuts left the totals collect rescanning g uncached; the lazy
-    // result frame still recomputes g once per downstream action)
-    val g = distinctScores(scored).cache()
-    try cumulate(g, probe(g)) finally { g.unpersist(); () }
-  }
-
   /** One threshold sweep's totals P, N, the AUC numerator
     * Σ np_s·(negBelow_s + nn_s/2) (negBelow = N − fp) and the step-wise
     * AP sum Σ (np_s/P)·(tp_s/(tp_s+fp_s)). */
-  private[ml] final case class Sweep(pos: Long, neg: Long, aucNum: Double, apSum: Double) {
+  final case class Sweep(pos: Long, neg: Long, aucNum: Double, apSum: Double) {
     def auc: Double =
       if (pos == 0L || neg == 0L) Double.NaN else aucNum / (pos.toDouble * neg.toDouble)
     def ap: Double = if (pos == 0L) Double.NaN else apSum
@@ -164,13 +156,17 @@ object Metrics {
   /** Spark's descending order of g's score: NaN first, then +∞ … −∞. */
   private val ScoreDesc: Ordering[Double] = Ordering.Double.TotalOrdering.reverse
 
-  /** The sweep behind `rocAuc` and `averagePrecision`. One probe aggregate
-    * over the cached g counts its rows; up to `driverMaxRows` of them are
-    * collected and swept on the driver, more are swept distributed
-    * (`cumulate`) from the same cached g and probe, with one aggregate for
-    * both sums. Tests pass `driverMaxRows = 0` to force the distributed
-    * sweep. */
-  private[ml] def sweep(scored: DataFrame, driverMaxRows: Long = DriverSweepMaxRows): Sweep = {
+  /** H9 + H10: one threshold sweep over (label, score) gives P, N, AUC and
+    * AP. One probe aggregate over the cached g counts its rows; up to
+    * `DriverSweepMaxRows` of them are collected and swept on the driver,
+    * more are swept distributed (`cumulate`) from the same cached g and
+    * probe, with one aggregate for both sums. g is released before
+    * returning. */
+  def sweep(scored: DataFrame): Sweep = sweep(scored, DriverSweepMaxRows)
+
+  /** `sweep` with the driver cutoff given: tests pass `driverMaxRows = 0`
+    * to force the distributed sweep. */
+  private[ml] def sweep(scored: DataFrame, driverMaxRows: Long): Sweep = {
     val g = distinctScores(scored).cache()
     try {
       val pr = probe(g)
@@ -219,19 +215,23 @@ object Metrics {
     Array(Array(at(0, 0), at(0, 1)), Array(at(1, 0), at(1, 1)))
   }
 
-  final case class ClassReport(label: Int, precision: Double, recall: Double,
-      f1: Double, support: Long)
+  /** H11: one class's row of sklearn's classification_report. A metric
+    * whose denominator is 0 (and F1 when precision + recall = 0) is None,
+    * never NaN or a made-up 0.0. */
+  final case class ClassReport(label: Int, precision: Option[Double],
+      recall: Option[Double], f1: Option[Double], support: Long)
 
-  /** H11: per-class precision/recall/F1/support — sklearn
-    * classification_report for the binary case (codes.py:293-294). */
-  def report(scored: DataFrame): Seq[ClassReport] = {
-    val cm = confusion(scored)
+  /** H11: per-class precision/recall/F1/support from the confusion counts
+    * — sklearn classification_report for the binary case
+    * (codes.py:293-294). */
+  def report(cm: Array[Array[Long]]): Seq[ClassReport] = {
     val Array(Array(tn, fp), Array(fn, tp)) = cm
-    def div(a: Long, b: Long): Double = if (b == 0L) 0.0 else a.toDouble / b
-    def f1(p: Double, r: Double): Double = if (p + r == 0.0) 0.0 else 2 * p * r / (p + r)
-    val p0 = div(tn, tn + fn); val r0 = div(tn, tn + fp)
-    val p1 = div(tp, tp + fp); val r1 = div(tp, tp + fn)
-    Seq(ClassReport(0, p0, r0, f1(p0, r0), tn + fp),
-      ClassReport(1, p1, r1, f1(p1, r1), fn + tp))
+    def div(a: Long, b: Long): Option[Double] = if (b == 0L) None else Some(a.toDouble / b)
+    def row(label: Int, t: Long, predDen: Long, truthDen: Long, support: Long) = {
+      val (p, r) = (div(t, predDen), div(t, truthDen))
+      val f1 = for { pv <- p; rv <- r; if pv + rv != 0.0 } yield 2 * pv * rv / (pv + rv)
+      ClassReport(label, p, r, f1, support)
+    }
+    Seq(row(0, tn, tn + fn, tn + fp, tn + fp), row(1, tp, tp + fp, tp + fn, fn + tp))
   }
 }

@@ -22,23 +22,37 @@ object Stats {
 
   /** One column whose exact interpolated median is wanted, with its non-null
     * count and min/max — callers fold these into an existing aggregation job
-    * (Features.Ep1Scalars) or use [[exactMedian]] which computes them. */
+    * (Features.Ep1Scalars) or use [[exactMedians]] which computes them. */
   final case class MedianSpec(name: String, c: Column, n: Long, lo: Double, hi: Double)
+
+  /** The stats pre-pass: each named column's non-null count and min/max,
+    * for all of them in ONE aggregate. Columns with no non-null value are
+    * left out. */
+  private def specsOf(df: DataFrame, cols: Seq[(String, Column)]): Seq[MedianSpec] = {
+    val aggs = cols.flatMap { case (_, c) =>
+      val v = c.cast(DoubleType)
+      Seq(count(v), min(v), max(v))
+    }
+    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    cols.zipWithIndex.collect { case ((name, c), i) if r.getLong(3 * i) > 0L =>
+      MedianSpec(name, c, r.getLong(3 * i), r.getDouble(3 * i + 1), r.getDouble(3 * i + 2))
+    }
+  }
+
+  /** Exact interpolated medians of named columns: one stats pre-pass plus
+    * the shared histogram/pick rounds, whatever the column count. A column
+    * with no non-null value has no entry. */
+  def exactMedians(df: DataFrame, cols: Seq[(String, Column)]): Map[String, Double] = {
+    val specs = specsOf(df, cols)
+    if (specs.isEmpty) Map.empty else mediansFromStats(df, specs)
+  }
 
   /** Exact interpolated median of one column: (n odd) the middle value,
     * (n even) the mean of the two middle values — pandas `Series.median`.
     * None on empty/all-null input (never throws, ADVICE r02). Typical cost:
     * 3 jobs — stats agg, histogram, bucket pick — independent of data size. */
-  def exactMedian(df: DataFrame, c: Column): Option[Double] = {
-    val r = df.agg(
-      count(c.cast(DoubleType)).as("n"),
-      min(c.cast(DoubleType)).as("lo"),
-      max(c.cast(DoubleType)).as("hi")).collect()(0)
-    if (r.getLong(0) == 0L) None
-    else
-      Some(mediansFromStats(df,
-        Seq(MedianSpec("m", c, r.getLong(0), r.getDouble(1), r.getDouble(2))))("m"))
-  }
+  def exactMedian(df: DataFrame, c: Column): Option[Double] =
+    exactMedians(df, Seq("m" -> c)).get("m")
 
   /** Exact medians for many columns in shared jobs (one histogram job + one
     * pick job per refinement level, regardless of column count).
@@ -101,15 +115,8 @@ object Stats {
     * input (never throws — the exactMedian contract, ADVICE r02),
     * otherwise the values aligned with `ps`. One stats job + the shared
     * histogram/pick rounds. */
-  def exactQuantiles(df: DataFrame, c: Column, ps: Seq[Double]): Option[Seq[Double]] = {
-    val r = df.agg(
-      count(c.cast(DoubleType)).as("n"),
-      min(c.cast(DoubleType)).as("lo"),
-      max(c.cast(DoubleType)).as("hi")).collect()(0)
-    if (r.getLong(0) == 0L) None
-    else Some(quantilesFromStats(df,
-      Seq(MedianSpec("q", c, r.getLong(0), r.getDouble(1), r.getDouble(2))), ps)("q"))
-  }
+  def exactQuantiles(df: DataFrame, c: Column, ps: Seq[Double]): Option[Seq[Double]] =
+    specsOf(df, Seq("q" -> c)).headOption.map(spec => quantilesFromStats(df, Seq(spec), ps)("q"))
 
   /** Exact DISCRETE quantiles (`quantile_disc` / SQL PERCENTILE_DISC):
     * the smallest element whose cumulative rank reaches p — order stat
@@ -120,19 +127,12 @@ object Stats {
     * form; None on empty/all-null input. */
   def exactQuantilesDisc(df: DataFrame, c: Column, ps: Seq[Double]): Option[Seq[Double]] = {
     require(ps.forall(p => p >= 0.0 && p <= 1.0))
-    val r = df.agg(
-      count(c.cast(DoubleType)).as("n"),
-      min(c.cast(DoubleType)).as("lo"),
-      max(c.cast(DoubleType)).as("hi")).collect()(0)
-    if (r.getLong(0) == 0L) None
-    else {
-      val n = r.getLong(0)
-      val spec = MedianSpec("q", c, n, r.getDouble(1), r.getDouble(2))
+    specsOf(df, Seq("q" -> c)).headOption.map { spec =>
       val wanted = Seq(spec -> ps.zipWithIndex.map { case (p, i) =>
-        i -> math.max(0L, math.ceil(p * n).toLong - 1L)
+        i -> math.max(0L, math.ceil(p * spec.n).toLong - 1L)
       })
       val resolved = orderStats(df, wanted, 8192, 1L << 20)
-      Some(ps.indices.map(i => resolved(("q", i))))
+      ps.indices.map(i => resolved(("q", i)))
     }
   }
 

@@ -50,8 +50,8 @@ object ScaleGuardRule extends Rule[LogicalPlan] {
           throw new ScaleGuardViolation(
             "ScaleGuard: Window with no PARTITION BY moves every row to one " +
               "task. Partition the window, or use the engine's distributed " +
-              "form (graft.ml.Metrics.binaryStats' segment-offset pattern " +
-              "for global cumulative sums). If the input is provably bounded " +
+              "form (the segment-offset pattern of graft.ml.Metrics.sweep's " +
+              "distributed path for global cumulative sums). If the input is provably bounded " +
               "(e.g. a vocabulary), run this job class with " +
               s"$confKey=false and document the bound.")
         case j @ Join(_, _, Inner | Cross, None, _) if !broadcastHinted(j) =>

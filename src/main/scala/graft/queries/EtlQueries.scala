@@ -97,19 +97,8 @@ object EtlQueries {
     // of ONE shared stats pass + one histogram/pick round (3 jobs total)
     // instead of each impute stage collecting its own 3 (the Ep1Scalars
     // argument, Features.scala): measured ~2 s off g1 at sf0.1.
-    val medCols = Seq("flow_rate", "pcr_target_flowpop_lin")
-    val statsRow = src.agg(
-      count(col(medCols.head).cast(DoubleType)).as(s"n_${medCols.head}"),
-      medCols.tail.map(c => count(col(c).cast(DoubleType)).as(s"n_$c")) ++
-        medCols.flatMap(c => Seq(
-          min(col(c).cast(DoubleType)).as(s"lo_$c"),
-          max(col(c).cast(DoubleType)).as(s"hi_$c"))): _*).collect()(0)
-    val specs = medCols.filter(c => statsRow.getAs[Long](s"n_$c") > 0L).map(c =>
-      graft.ops.Stats.MedianSpec(c, col(c), statsRow.getAs[Long](s"n_$c"),
-        statsRow.getAs[Double](s"lo_$c"), statsRow.getAs[Double](s"hi_$c")))
-    val medians =
-      if (specs.isEmpty) Map.empty[String, Double]
-      else graft.ops.Stats.mediansFromStats(src, specs)
+    val medians = graft.ops.Stats.exactMedians(src,
+      Seq("flow_rate", "pcr_target_flowpop_lin").map(c => c -> col(c)))
 
     val staged = Seq[DataFrame => DataFrame](
       Features.dateParts,

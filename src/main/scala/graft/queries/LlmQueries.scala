@@ -1043,8 +1043,8 @@ object LlmQueries {
     * cardinality at web scale (~10⁸ registrable domains) gives the
     * exchange its parallelism; a pathological mega-domain that outgrows
     * one task takes the deterministic segment-offset escalation
-    * binaryStats already implements (per-segment cumsum + bounded offset
-    * fold) — same results, documented trade. Ties cannot occur (doc_id
+    * Metrics.sweep's distributed path already implements (per-segment
+    * cumsum + bounded offset fold) — same results, documented trade. Ties cannot occur (doc_id
     * is the final order key), so the RANGE-frame default of both engines'
     * running sums is row-exact. */
   val l89_source_cap = Q(

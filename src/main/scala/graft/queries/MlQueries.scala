@@ -8,11 +8,13 @@ import graft.ml.Metrics
 /** The SQL-expressible half of the EP3 ML pipeline (SURVEY §2 H6, H8-H11)
   * declared as oracle-checked queries — so the metric math itself is
   * hash-verified against an independent engine, not just property-tested.
-  * The model-fitting half (H1-H5, H7, H12: assembler, splits, scaler, PCA,
-  * GBT) is exercised by the scalatest golden suite instead — tree ensembles
-  * aren't SQL.
+  * h8-h11 and h18 evaluate through [[graft.ml.Metrics]] (confusion counts,
+  * the threshold sweep, the per-class report): the oracle checks the code
+  * EP3 runs, not a parallel copy. The model-fitting half (H1-H5, H7, H12:
+  * assembler, splits, scaler, PCA, GBT) is exercised by the scalatest
+  * golden suite instead — tree ensembles aren't SQL.
   *
-  * All five run over one deterministic scored frame derived from lineitem:
+  * All of them run over one deterministic scored frame derived from lineitem:
   *   score  = (price-cents mod 1000) / 1000            — pseudo-uniform
   *   label  = [(31·l_partkey + l_suppkey) mod 1000 < price-cents mod 1000]
   * so P(label=1 | score) = score: a perfectly calibrated scorer with
@@ -44,28 +46,38 @@ object MlQueries {
 
   /** The closed-form OLS fit over the scored frame — slope = cov/var,
     * intercept from the means — as ONE aggregate producing a 1-row (b, a)
-    * frame for broadcasting back over the rows. One definition for h6,
-    * h8 and h11 (the copy in each query drifted as a unit before —
-    * review finding r07); the oracle's shared CTE `f` states the same
-    * regr_slope/regr_intercept. */
+    * frame for broadcasting back over the rows; the oracle's shared CTE
+    * `f` states the same regr_slope/regr_intercept. */
   private def olsFit(sc: DataFrame): DataFrame =
     sc.agg(
       (covar_pop(col("label"), col("x")) / var_pop(col("x"))).as("b"),
       avg("label").as("ybar"), avg("x").as("xbar"))
       .select(col("b"), (col("ybar") - col("b") * col("xbar")).as("a"))
 
-  /** The threshold-sweep stats frame (Metrics.binaryStats over the shared
-    * scored frame) — h9 and h10 both read it, and its construction is
-    * EAGER (min/max probe + cut refinement + totals collect), so each
-    * consumer re-running it doubles those jobs. Shared once per (session,
-    * sfDir) through [[Shared.frame]]. */
-  private def binaryStatsCached(
-      s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    Shared.frame(s, d, "ml_stats")(Metrics.binaryStats(
-      scored(s, d).select(col("label"), col("x").as("score"))))
+  /** The scored frame with the OLS fit broadcast back and its score
+    * yhat = a + b·x: the one definition h6, h8, h11, h15, h16 and h18
+    * read, so no two of them can score differently. */
+  private def olsScored(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
+    val sc = scored(s, d)
+    sc.crossJoin(broadcast(olsFit(sc)))
+      .withColumn("yhat", col("a") + col("b") * col("x"))
+  }
 
-  /** Unpersist and forget every shared query frame — a forwarder to the
-    * one eviction routine, [[Shared.clear]]. */
+  /** (label, prediction) at the reference's 0.5 cut (codes.py:258-261):
+    * the input `Metrics.confusion` reads for h8, h11 and h18. */
+  private def olsPredicted(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    olsScored(s, d).select(col("label"), (col("yhat") > 0.5).cast("long").as("prediction"))
+
+  /** Spark's `round(x, 6)` (HALF_UP on the decimal expansion) for a metric
+    * computed on the driver; an undefined (non-finite) metric is None, the
+    * SQL null a zero denominator gives with ANSI off. */
+  private def r6(x: Double): Option[Double] =
+    if (x.isNaN || x.isInfinite) None
+    else Some(BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+
+  /** Unpersist and forget every shared query frame (MlQueries itself
+    * holds none) — a forwarder to the one eviction routine,
+    * [[Shared.clear]], kept for callers that clear every hook. */
   def clearStatsCache(): Unit = Shared.clear()
 
   /** H6+H7 (codes.py:227,258-261): OLS-as-scorer — single-feature least
@@ -81,18 +93,15 @@ object MlQueries {
        |       CAST(a + b * x > 0.5 AS BIGINT) AS pred
        |FROM s, f ORDER BY key""".stripMargin
   ) { (s, d) =>
-    val sc = scored(s, d)
-    val fit = olsFit(sc)
-    val yhat = col("a") + col("b") * col("x")
-    sc.crossJoin(broadcast(fit))
+    olsScored(s, d)
       .select(col("key"),
-        round(least(greatest(yhat, lit(0.0)), lit(1.0)), 6).as("proba"),
-        (yhat > 0.5).cast("long").as("pred"))
+        round(least(greatest(col("yhat"), lit(0.0)), lit(1.0)), 6).as("proba"),
+        (col("yhat") > 0.5).cast("long").as("pred"))
       .orderBy("key")
   }
 
-  /** H8 (codes.py:268): accuracy as one map-side-combinable aggregate over
-    * the OLS predictions (threshold at 0.5 like the reference). */
+  /** H8 (codes.py:268): `Metrics.accuracy` of the confusion counts of the
+    * OLS predictions (threshold at 0.5 like the reference). */
   val h8_accuracy = Q(
     "h8_accuracy",
     s"""WITH s AS ($scoredSql),
@@ -101,17 +110,19 @@ object MlQueries {
        |       CAST(count(*) AS BIGINT) AS n
        |FROM s, f""".stripMargin
   ) { (s, d) =>
-    val sc = scored(s, d)
-    val pred = (col("a") + col("b") * col("x") > 0.5).cast("long")
-    sc.crossJoin(broadcast(olsFit(sc)))
-      .agg(round(avg((pred === col("label")).cast("double")), 6).as("accuracy"),
-        count(lit(1)).as("n"))
+    import s.implicits._
+    val cm = Metrics.confusion(olsPredicted(s, d))
+    Seq((r6(Metrics.accuracy(cm)), cm.map(_.sum).sum)).toDF("accuracy", "n")
   }
 
-  /** H9 (codes.py:272): exact ROC-AUC. Spark side: the range-partitioned
-    * threshold sweep (Metrics.binaryStats — no single-task global sort);
-    * oracle: the tie-corrected Mann-Whitney average-rank identity, which
-    * equals trapezoidal AUC over all distinct thresholds. */
+  /** The threshold sweep over (label, score = x) that h9 and h10 report. */
+  private def xSweep(s: org.apache.spark.sql.SparkSession, d: String): Metrics.Sweep =
+    Metrics.sweep(scored(s, d).select(col("label"), col("x").as("score")))
+
+  /** H9 (codes.py:272): exact ROC-AUC. Spark side: `Metrics.sweep` (no
+    * single-task global sort); oracle: the tie-corrected Mann-Whitney
+    * average-rank identity, which equals trapezoidal AUC over all distinct
+    * thresholds. */
   val h9_roc_auc = Q(
     "h9_roc_auc",
     s"""WITH s AS ($scoredSql),
@@ -125,18 +136,14 @@ object MlQueries {
        |       CAST(p AS BIGINT) AS positives, CAST(n AS BIGINT) AS negatives
        |FROM t""".stripMargin
   ) { (s, d) =>
-    val stats = binaryStatsCached(s, d)
-    val tot = stats.agg(sum("np").as("p"), sum("nn").as("n"))
-    stats.crossJoin(broadcast(tot))
-      .agg(round(
-        sum(col("np") * (col("n") - col("fp") + col("nn") / lit(2.0))) /
-          (first("p") * first("n")), 6).as("roc_auc"),
-        first("p").as("positives"), first("n").as("negatives"))
+    import s.implicits._
+    val sw = xSweep(s, d)
+    Seq((r6(sw.auc), sw.pos, sw.neg)).toDF("roc_auc", "positives", "negatives")
   }
 
   /** H10 (codes.py:273): sklearn STEP-WISE average precision
     * Σ (np_s/P)·precision_s over thresholds descending — not the
-    * interpolated areaUnderPR. */
+    * interpolated areaUnderPR — from `Metrics.sweep`. */
   val h10_avg_precision = Q(
     "h10_avg_precision",
     s"""WITH s AS ($scoredSql),
@@ -150,18 +157,15 @@ object MlQueries {
        |       CAST(pos AS BIGINT) AS positives
        |FROM c, p GROUP BY pos""".stripMargin
   ) { (s, d) =>
-    val stats = binaryStatsCached(s, d)
-    val tot = stats.agg(sum("np").as("pos"))
-    stats.crossJoin(broadcast(tot))
-      .agg(round(
-        sum(col("np") / col("pos") * col("tp") / (col("tp") + col("fp"))), 6)
-        .as("avg_precision"),
-        first("pos").as("positives"))
+    import s.implicits._
+    val sw = xSweep(s, d)
+    Seq((r6(sw.ap), sw.pos)).toDF("avg_precision", "positives")
   }
 
   /** H11 (codes.py:293-296): per-class precision/recall/F1/support — the
-    * classification_report rows, from one conditional-aggregate pass over
-    * the OLS predictions (the confusion counts), expanded to both classes. */
+    * classification_report rows of `Metrics.report` over the confusion
+    * counts of the OLS predictions, rounded at 6 dp; an undefined metric
+    * (zero denominator) is null. */
   val h11_class_report = Q(
     "h11_class_report",
     s"""WITH s AS ($scoredSql),
@@ -183,46 +187,11 @@ object MlQueries {
        |       CAST(fn + tp AS BIGINT) FROM cm
        |ORDER BY class""".stripMargin
   ) { (s, d) =>
-    val sc = scored(s, d)
-    val pred = (col("a") + col("b") * col("x") > 0.5).cast("long")
-    // ONE pass: collect the 1-row confusion aggregate, then expand to the
-    // two class rows driver-side (the Metrics.report shape) — the lazy
-    // two-branch union re-ran the scan + fit + aggregate per class
-    // (review finding r07)
-    val cm = sc.crossJoin(broadcast(olsFit(sc)))
-      .agg(
-        sum(when(col("label") === 0 && pred === 0, 1L).otherwise(0L)).as("tn"),
-        sum(when(col("label") === 0 && pred === 1, 1L).otherwise(0L)).as("fp"),
-        sum(when(col("label") === 1 && pred === 0, 1L).otherwise(0L)).as("fn"),
-        sum(when(col("label") === 1 && pred === 1, 1L).otherwise(0L)).as("tp"))
-      .collect()(0)
-    val (tn, fp, fn, tp) =
-      (cm.getLong(0), cm.getLong(1), cm.getLong(2), cm.getLong(3))
     import s.implicits._
-    Seq(
-      reportRow(0L, tn, tn + fn, tn + fp, tn + fp),
-      reportRow(1L, tp, tp + fp, tp + fn, fn + tp))
+    Metrics.report(Metrics.confusion(olsPredicted(s, d)))
+      .map(c => (c.label.toLong, c.precision.flatMap(r6), c.recall.flatMap(r6),
+        c.f1.flatMap(r6), c.support))
       .toDF("class", "precision", "recall", "f1", "support")
-      .orderBy("class")
-  }
-
-  /** The h11 per-class row math over raw confusion counts. Zero
-    * denominators and p+r = 0 yield None (SQL null), matching the
-    * columnar form this driver-side math replaced (Spark divide-by-zero
-    * returns null with ANSI off — ADVICE r07: the bare doubles produced
-    * NaN/Infinity). Package-visible so the degenerate-matrix spec can
-    * exercise the guards directly — the oracle-gated fixture never
-    * produces an empty class. */
-  private[graft] def reportRow(cls: Long, t: Long, predDen: Long,
-      truthDen: Long, support: Long)
-      : (Long, Option[Double], Option[Double], Option[Double], Long) = {
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val p = if (predDen == 0L) None else Some(t.toDouble / predDen)
-    val r = if (truthDen == 0L) None else Some(t.toDouble / truthDen)
-    val f1 = for { pv <- p; rv <- r; if pv + rv != 0.0 }
-      yield 2.0 * pv * rv / (pv + rv)
-    (cls, p.map(r6), r.map(r6), f1.map(r6), support)
   }
 
   /** H13: deterministic k-fold assignment — md5(key) mod k, the
@@ -257,14 +226,6 @@ object MlQueries {
       .agg(count(lit(1)).as("n"), sum("label").as("n_pos"))
       .orderBy("fold")
   }
-
-  /** Shared-cache builders for Bench's cachebuild attribution pass (same
-    * contract as [[LlmQueries.cacheBuilders]]): the eager threshold-sweep
-    * stats frame h9 and h10 share — without this line the alphabetically
-    * first consumer (h10) absorbs its construction. */
-  def cacheBuilders
-      : Seq[(String, (org.apache.spark.sql.SparkSession, String) => Unit)] = Seq(
-    ("ml_stats", (s, d) => { binaryStatsCached(s, d).count(); () }))
 
   /** H15: regression metrics for the OLS scorer — MAE, RMSE, Brier score
     * (= MSE of the clamped probability against the 0/1 label) and R²,
@@ -305,14 +266,13 @@ object MlQueries {
        |       round(1 - CAST(sse AS DOUBLE) / CAST(sst AS DOUBLE), 6) AS r2
        |FROM agg""".stripMargin
   ) { (s, d) =>
-    val sc = scored(s, d)
-    val ybar = sc.agg(avg("label")).collect()(0).getDouble(0)
-    val proba = least(greatest(col("a") + col("b") * col("x"), lit(0.0)), lit(1.0))
+    val ybar = scored(s, d).agg(avg("label")).collect()(0).getDouble(0)
+    val proba = least(greatest(col("yhat"), lit(0.0)), lit(1.0))
     val err = col("label") - proba
     val dev = col("label") - lit(ybar)
     val dec = (c: org.apache.spark.sql.Column) =>
       sum(round(c, 12).cast("decimal(28,12)"))
-    sc.crossJoin(broadcast(olsFit(sc)))
+    olsScored(s, d)
       .agg(count(lit(1)).as("n"), dec(abs(err)).as("sae"),
         dec(err * err).as("sse"), dec(dev * dev).as("sst"))
       .select(col("n"),
@@ -367,11 +327,9 @@ object MlQueries {
        |FROM c ORDER BY decile""".stripMargin
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val sc = scored(s, d)
-    val pr = sc.crossJoin(broadcast(olsFit(sc)))
+    val pr = olsScored(s, d)
       .select(col("key"), col("label"),
-        round(least(greatest(col("a") + col("b") * col("x"), lit(0.0)),
-          lit(1.0)), 6).as("proba"))
+        round(least(greatest(col("yhat"), lit(0.0)), lit(1.0)), 6).as("proba"))
     // value-grid cumulative: rows with a strictly GREATER score (score
     // DESC order) — <=1000 metadata rows, the documented exception class
     val grid = pr.groupBy("proba").agg(count(lit(1)).as("c"))
@@ -519,14 +477,15 @@ object MlQueries {
     * leaderboards default to it). Emitted WITH its four exact counts so
     * a reviewer can recompute it by hand.
     *
-    * Determinism: the four cells are exact integer aggregates off the
-    * shared h6 cut (ŷ > 0.5 on the broadcast OLS fit — same predicate,
-    * same fit, so h6/h8/h18 can never silently diverge); the numerator
-    * and the four marginals multiply in DECIMAL(38,0) before the one
-    * √ and division, rounded 6 dp (zero marginal ⇒ null, never NaN).
+    * Determinism: the four cells are `Metrics.confusion`'s exact counts
+    * off the shared cut (`olsPredicted`: the h6 predicate on the same
+    * broadcast fit, so h6/h8/h11/h18 can never silently diverge); the
+    * numerator and the four marginals multiply exactly (BigDecimal, the
+    * oracle's DECIMAL(38,0)) before the one √ and division, rounded 6 dp
+    * (zero marginal ⇒ null, never NaN).
     *
-    * 100 TB posture: ONE map-combinable aggregate over the scored
-    * frame (the d6 single-pass shape) — no window, no second scan. */
+    * 100 TB posture: ONE map-combinable grouped aggregate over the scored
+    * frame (≤4 groups) — no window, no second scan. */
   val h18_mcc = Q(
     "h18_mcc",
     s"""WITH s AS ($scoredSql),
@@ -548,31 +507,20 @@ object MlQueries {
        |                              * (tp + fn) * (tn + fp) * (tn + fn)
        |                              AS DOUBLE)) END, 6) AS mcc
        |FROM c""".stripMargin
-  ) { (s, d) =>
-    val sc = scored(s, d)
-    mcc(sc.crossJoin(broadcast(olsFit(sc)))
-      .select(col("label"),
-        (col("a") + col("b") * col("x") > 0.5).cast("long").as("pred")))
-  }
+  ) { (s, d) => mcc(olsPredicted(s, d)) }
 
-  /** h18's engine over any (label, pred) ∈ {0,1}² frame — factored for
-    * BrierSpec's closed forms (perfect = 1, inverted = −1, one-class
+  /** h18's engine over any (label, prediction) ∈ {0,1}² frame — factored
+    * for BrierSpec's closed forms (perfect = 1, inverted = −1, one-class
     * marginal = null never NaN). */
   private[graft] def mcc(p: DataFrame): DataFrame = {
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-    val c = p.agg(
-      sum(when(col("pred") === 1 && col("label") === 1, 1L).otherwise(0L)).as("tp"),
-      sum(when(col("pred") === 1 && col("label") === 0, 1L).otherwise(0L)).as("fp"),
-      sum(when(col("pred") === 0 && col("label") === 0, 1L).otherwise(0L)).as("tn"),
-      sum(when(col("pred") === 0 && col("label") === 1, 1L).otherwise(0L)).as("fn"))
-    val deg = (col("tp") + col("fp")) * (col("tp") + col("fn")) === 0 ||
-      (col("tn") + col("fp")) * (col("tn") + col("fn")) === 0
-    c.select(col("tp"), col("fp"), col("tn"), col("fn"),
-      round(when(deg, lit(null)).otherwise(
-        (dec(col("tp")) * col("tn") - dec(col("fp")) * col("fn")).cast("double") /
-          sqrt((dec(col("tp") + col("fp")) * (col("tp") + col("fn")) *
-            (col("tn") + col("fp")) * (col("tn") + col("fn"))).cast("double"))),
-        6).as("mcc"))
+    import p.sparkSession.implicits._
+    val Array(Array(tn, fp), Array(fn, tp)) = Metrics.confusion(p)
+    val marginals = Seq(tp + fp, tp + fn, tn + fp, tn + fn)
+    val v =
+      if (marginals.contains(0L)) None
+      else r6((BigDecimal(tp) * tn - BigDecimal(fp) * fn).toDouble /
+        math.sqrt(marginals.map(BigDecimal(_)).product.toDouble))
+    Seq((tp, fp, tn, fn, v)).toDF("tp", "fp", "tn", "fn", "mcc")
   }
 
   val all: Seq[Q] = Seq(

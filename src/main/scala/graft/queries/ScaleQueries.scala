@@ -11,13 +11,6 @@ import graft.Tables._
   */
 object ScaleQueries {
 
-  /** Scratch path for layout-demo writes — the one shared definition,
-    * hoisted to [[graft.Tables.scratchDir]] (ADVICE r14) so the
-    * cleanup/fallback policy can't diverge between this file's layout
-    * demos and the CoreQueries roundtrips. */
-  private def scratchDir(s: org.apache.spark.sql.SparkSession, d: String,
-      prefix: String): String = graft.Tables.scratchDir(s, d, prefix)
-
   /** The conf-scoped child session a query plans in (a12's bloom join,
     * f8's skew join) — memoized per (parent session, tag) (ADVICE r08: a
     * fresh `newSession()` per invocation churned a SessionState + catalog
@@ -51,7 +44,7 @@ object ScaleQueries {
       |WHERE o.o_orderstatus = 'F'
       |GROUP BY 1 ORDER BY 1""".stripMargin
   ) { (s, d) =>
-    val wh = scratchDir(s, d, "graft_bucketed")
+    val wh = graft.Tables.scratchDir(s, d, "graft_bucketed")
     s.sql("DROP TABLE IF EXISTS graft_li_bucketed")
     s.sql("DROP TABLE IF EXISTS graft_ord_bucketed")
     // repartition INTO the bucket partitioning before writing: bucket id
@@ -96,7 +89,7 @@ object ScaleQueries {
       |FROM lineitem WHERE l_returnflag = 'R'
       |GROUP BY 1 ORDER BY 1""".stripMargin
   ) { (s, d) =>
-    val dir = scratchDir(s, d, "graft_partitioned")
+    val dir = graft.Tables.scratchDir(s, d, "graft_partitioned")
     lineitem(s, d).select("l_returnflag", "l_linestatus", "l_quantity")
       .write.partitionBy("l_returnflag").mode("overwrite").parquet(dir)
     s.read.parquet(dir)
@@ -128,7 +121,7 @@ object ScaleQueries {
       |GROUP BY 1 ORDER BY 1""".stripMargin
   ) { (s, d) =>
     import s.implicits._
-    val dir = scratchDir(s, d, "graft_dpp")
+    val dir = graft.Tables.scratchDir(s, d, "graft_dpp")
     lineitem(s, d).select("l_returnflag", "l_linestatus", "l_quantity")
       .write.partitionBy("l_returnflag").mode("overwrite").parquet(s"$dir/fact")
     Seq(("A", "no"), ("N", "no"), ("R", "yes")).toDF("flag", "keep")
@@ -370,7 +363,7 @@ object ScaleQueries {
       |SELECT o_orderkey, o_custkey, o_totalprice, CAST(o_year AS BIGINT) AS o_year
       |FROM r WHERE rn = 1 ORDER BY o_orderkey""".stripMargin
   ) { (s, d) =>
-    val dir = scratchDir(s, d, "graft_upsert")
+    val dir = graft.Tables.scratchDir(s, d, "graft_upsert")
     PartitionUpsert.writeBase(s, d, dir)
     PartitionUpsert.applyChanges(s, d, dir)
     PartitionUpsert.readState(s, dir)
@@ -561,7 +554,7 @@ object ScaleQueries {
        |FROM lineitem
        |WHERE l_partkey BETWEEN 100 AND 500 AND l_suppkey BETWEEN 10 AND 40""".stripMargin
   ) { (s, d) =>
-    val dir = scratchDir(s, d, "graft_zorder")
+    val dir = graft.Tables.scratchDir(s, d, "graft_zorder")
     lineitem(s, d).select("l_partkey", "l_suppkey", "l_quantity")
       .withColumn("zkey", graft.ops.ZOrder.zkey(col("l_partkey"), col("l_suppkey")))
       .repartitionByRange(8, col("zkey"))

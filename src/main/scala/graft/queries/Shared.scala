@@ -4,16 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The one memo for frames several declared queries share (the l4/l14 pair
-  * frame, the l15/l21 quality frame, the IVF fit, the h9/h10 sweep stats,
-  * …), keyed by what the frame computes: (session, data dir or canonical
-  * input plan string, tag).
+  * frame, the l15/l21 quality frame, the IVF fit, the cluster labels, …),
+  * keyed by what the frame computes: (session, data dir or canonical input
+  * plan string, tag).
   *
   * Why a memo and not Spark's `CacheManager` alone: frames built over a
   * lazy `localCheckpoint` (the pair and containment frames) hold a fresh
   * `LogicalRDD`, whose equality compares the RDD by reference, so a rebuilt
-  * frame never matches the earlier cache entry; and the eager builds
-  * (`Graph.connectedComponents`, `Metrics.binaryStats`) would re-run their
-  * jobs on every rebuild. The memo hands back the frame it holds instead.
+  * frame never matches the earlier cache entry; and an eager build
+  * (`Graph.connectedComponents`) would re-run its jobs on every rebuild. The memo hands back the frame it holds instead.
   *
   * Policy, for every shared frame:
   *  - `build` runs OUTSIDE the map update; `putIfAbsent` installs the

@@ -69,16 +69,21 @@ class QueryHardeningSpec extends AnyFunSuite {
   }
 
   test("h11: degenerate confusion matrices yield null (None), never NaN") {
+    import graft.ml.Metrics
+    // cm = [[TN, FP], [FN, TP]]
     // every prediction negative → class-1 precision denominator is 0
-    val r1 = MlQueries.reportRow(1L, 0L, 0L, 5L, 5L)
-    assert(r1._2.isEmpty && r1._3.contains(0.0) && r1._4.isEmpty)
+    val r1 = Metrics.report(Array(Array(3L, 0L), Array(5L, 0L)))(1)
+    assert(r1.precision.isEmpty && r1.recall.contains(0.0) && r1.f1.isEmpty &&
+      r1.support == 5L)
     // class absent from the truth → recall denominator is 0
-    val r2 = MlQueries.reportRow(1L, 0L, 5L, 0L, 0L)
-    assert(r2._2.contains(0.0) && r2._3.isEmpty && r2._4.isEmpty)
+    val r2 = Metrics.report(Array(Array(3L, 5L), Array(0L, 0L)))(1)
+    assert(r2.precision.contains(0.0) && r2.recall.isEmpty && r2.f1.isEmpty &&
+      r2.support == 0L)
     // p = r = 0 → the f1 p+r guard, not 0/0
-    val r3 = MlQueries.reportRow(0L, 0L, 4L, 6L, 6L)
-    assert(r3._2.contains(0.0) && r3._3.contains(0.0) && r3._4.isEmpty)
-    for (r <- Seq(r1, r2, r3); v <- Seq(r._2, r._3, r._4).flatten)
+    val r3 = Metrics.report(Array(Array(0L, 6L), Array(4L, 2L)))(0)
+    assert(r3.precision.contains(0.0) && r3.recall.contains(0.0) && r3.f1.isEmpty &&
+      r3.support == 6L)
+    for (r <- Seq(r1, r2, r3); v <- Seq(r.precision, r.recall, r.f1).flatten)
       assert(!v.isNaN && !v.isInfinite)
   }
 

@@ -70,7 +70,7 @@ class ScaleGuardSpec extends AnyFunSuite {
       try {
         val v = guardViolation(q())
         assert(v.getMessage.contains("PARTITION BY") &&
-          v.getMessage.contains("binaryStats"),
+          v.getMessage.contains("Metrics.sweep"),
           "the violation must name the fix, not just the crime")
       } finally s.conf.set("spark.graft.scaleguard", "false")
     }

@@ -70,7 +70,7 @@ class BrierSpec extends AnyFunSuite {
       "marginal = null (never NaN), hand 2x2 hits the exact value") {
     import spark.implicits._
     def run(rows: Seq[(Long, Long)]): org.apache.spark.sql.Row =
-      MlQueries.mcc(rows.toDF("label", "pred")).collect()(0)
+      MlQueries.mcc(rows.toDF("label", "prediction")).collect()(0)
     val perfect = run(Seq((1L, 1L), (1L, 1L), (0L, 0L)))
     assert(perfect.getDouble(4) === 1.0)
     val inverted = run(Seq((1L, 0L), (0L, 1L), (0L, 1L), (1L, 0L)))

@@ -141,10 +141,13 @@ object MetricsProps extends Properties("Metrics") {
     val fp = rows.count { case (y, s) => y == 0 && predOf(s) == 1 }
     val fn = rows.count { case (y, s) => y == 1 && predOf(s) == 0 }
     val tp = rows.count { case (y, s) => y == 1 && predOf(s) == 1 }
-    val rep = Metrics.report(df)
-    val p1 = if (tp + fp == 0) 0.0 else tp.toDouble / (tp + fp)
+    val rep = Metrics.report(cm)
+    val p1Ok = rep(1).precision match {
+      case None => tp + fp == 0
+      case Some(p1) => tp + fp > 0 && math.abs(p1 - tp.toDouble / (tp + fp)) < 1e-12
+    }
     (Prop(math.abs(Metrics.accuracy(df) - accWant) < 1e-12) :| "accuracy") &&
       (Prop(cm.map(_.toSeq).toSeq == Seq(Seq(tn.toLong, fp.toLong), Seq(fn.toLong, tp.toLong))) :| s"confusion ${cm.map(_.mkString(",")).mkString(";")}") &&
-      (Prop(math.abs(rep(1).precision - p1) < 1e-12) :| "report precision")
+      (Prop(p1Ok) :| s"report precision ${rep(1).precision} (tp $tp, fp $fp)")
   }
 }

@@ -101,7 +101,7 @@ class SharedFrameSpec extends AnyFunSuite {
     fresh()
     val sc = spark.sparkContext
     val before = sc.getRDDStorageInfo.map(_.id).toSet
-    val builders = LlmQueries.cacheBuilders ++ MlQueries.cacheBuilders
+    val builders = LlmQueries.cacheBuilders
     builders.foreach(_._2(spark, Sf))
     val entries = cacheEntries
     builders.foreach(_._2(spark, Sf))
